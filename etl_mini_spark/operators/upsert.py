@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_mini_spark.sources.readers import read_parquet
+
 
 def merge_upsert(
     target: DataFrame,
@@ -84,12 +86,15 @@ def upsert_parquet(
     path works on file://, hdfs://, and s3a:// targets, not just local
     disk. The crash window between delete and rename is recoverable
     (the stage dir holds the full merged result); a transactional
-    format (Delta/Iceberg MERGE) removes the window entirely."""
+    format (Delta/Iceberg MERGE) removes the window entirely.
+
+    The target is read through ``read_parquet``, so its schema comes
+    from a footer rather than an inference job."""
     from etl_mini_spark.sources.fs import fs_delete, fs_exists, fs_rename
 
     existed = fs_exists(spark, target_path)
     if existed:
-        target = spark.read.parquet(target_path)
+        target = read_parquet(spark, target_path)
         merged = merge_upsert(target, source, keys, update_columns, conflict_action)
     else:
         merged = source

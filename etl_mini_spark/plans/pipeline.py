@@ -133,9 +133,7 @@ def build_plan(
         if incremental:
             # Bounds applied inside the reader so they reach the parquet
             # scan even for TIMESTAMP(NANOS) columns (row-group pruning).
-            from etl_mini_spark.sources.readers import read_parquet_ts_range
-
-            df = read_parquet_ts_range(
+            df = read_parquet(
                 spark, src.path, spec.incremental_ts_col,
                 start=window_start, end=spec.window_end,
             )

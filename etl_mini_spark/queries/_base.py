@@ -57,7 +57,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-_TMP = Path("/root/repo/tmp")
+_TMP = Path(__file__).resolve().parents[2] / "tmp"
 
 
 def _sweep_scratch(prefix: str, min_age_s: int = 3600) -> None:

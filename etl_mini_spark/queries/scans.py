@@ -45,9 +45,9 @@ def filter_time_range(spark, sf_dir):
     row-group min/max stats prune (sources/readers.py)."""
     from datetime import datetime
 
-    from etl_mini_spark.sources.readers import read_parquet_ts_range
+    from etl_mini_spark.sources.readers import read_parquet
 
-    e = read_parquet_ts_range(
+    e = read_parquet(
         spark,
         f"{sf_dir}/events.parquet",
         "ts",

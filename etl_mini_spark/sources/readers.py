@@ -17,7 +17,9 @@ the data at 100 TB and can silently drift between runs.
 
 from __future__ import annotations
 
+import json
 from contextlib import contextmanager
+from datetime import timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -96,31 +98,100 @@ def read_ndjson(spark: SparkSession, path: str, schema: T.StructType | None = No
     return reader.schema(schema).json(path) if schema is not None else reader.json(path)
 
 
-_NS_COLS_CACHE: dict[str, list[str]] = {}
+def _is_hidden(name: str) -> bool:
+    """Names Spark's file index skips (InMemoryFileIndex.shouldFilterOutPathName)."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Column names stored as parquet TIMESTAMP(NANOS) — Spark cannot
-    read those natively (PARQUET_TYPE_ILLEGAL); we read them as long
-    via the legacy conf and convert to µs timestamps ourselves."""
-    if path not in _NS_COLS_CACHE:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+def _sample_footer(spark: SparkSession, path: str):
+    """``(ParquetMetadata, FileStatus, flat)`` for the data file Spark's
+    own schema inference would read, or None when there is none.
 
-        probe = Path(path.removeprefix("file://"))
-        if probe.is_dir():
-            parts = sorted(probe.glob("*.parquet")) or sorted(probe.rglob("*.parquet"))
-            if not parts:
-                _NS_COLS_CACHE[path] = []
-                return _NS_COLS_CACHE[path]
-            probe = parts[0]
-        schema = pq.read_schema(probe)
-        _NS_COLS_CACHE[path] = [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    return _NS_COLS_CACHE[path]
+    ``flat`` means that one footer is the whole table schema: a single
+    file, or a directory of data files with no subdirectories and no
+    summary files. A partitioned layout still gets a sample footer (for
+    the nanosecond check) but keeps Spark's inference. Listing and the
+    footer read go through the Hadoop FS, so any URI scheme works; a
+    path Hadoop cannot stat (a glob, a missing path) or a footer that
+    cannot be read returns None and leaves the error to Spark."""
+    from py4j.protocol import Py4JJavaError
+
+    from etl_mini_spark.sources.fs import _fs_and_path
+
+    jvm = spark._jvm
+    try:
+        fs, p = _fs_and_path(spark, path)
+        st = fs.getFileStatus(p)
+        flat = True
+        if st.isDirectory():
+            files = []
+            for child in fs.listStatus(p):
+                child_path = child.getPath().toString()
+                name = child_path.rsplit("/", 1)[-1]
+                if name in ("_metadata", "_common_metadata"):
+                    flat = False  # inference prefers summary files
+                elif _is_hidden(name):
+                    continue
+                elif child.isDirectory():
+                    flat = False
+                else:
+                    files.append((child_path, child))
+            if flat:
+                # Spark sorts the listing by path and reads the first file.
+                st = min(files, key=lambda f: f[0])[1] if files else None
+            else:
+                root = st.getPath().toString().rstrip("/") + "/"
+                st = None
+                it = fs.listFiles(p, True)
+                while it.hasNext():
+                    f = it.next()
+                    rel = f.getPath().toString().removeprefix(root)
+                    if not any(_is_hidden(part) for part in rel.split("/")):
+                        st = f
+                        break
+            if st is None:
+                return None
+        conf = spark._jsc.hadoopConfiguration()
+        footer = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+    except Py4JJavaError:
+        return None
+    return footer, st, flat
+
+
+def _nanos_timestamp_cols(footer) -> list[str]:
+    """Top-level columns whose parquet logical type is TIMESTAMP(NANOS).
+
+    Spark cannot read those natively (PARQUET_TYPE_ILLEGAL); we read
+    them as long via the legacy conf and convert to µs timestamps
+    ourselves. The check is on the parquet logical type: Spark's INT96
+    timestamps carry none, so they are read as timestamps (pyarrow's
+    arrow schema reports INT96 as ``timestamp[ns]``)."""
+    schema = footer.getFileMetaData().getSchema()
+    if "TIMESTAMP(NANOS" not in schema.toString():  # one py4j call in the common case
+        return []
+    out = []
+    for field in schema.getFields():
+        ann = field.getLogicalTypeAnnotation()
+        if ann is not None and ann.toString().startswith("TIMESTAMP(NANOS"):
+            out.append(field.getName())
+    return out
+
+
+def _footer_schema(spark: SparkSession, footer, status) -> T.StructType:
+    """The schema Spark's inference derives from this footer, computed
+    in-process with Spark's own converter under the session's current
+    confs (so the LTZ/NTZ and nanosAsLong settings apply as they would
+    to inference) — without the inference job."""
+    jvm = spark._jvm
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = pq.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
+    jschema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), footer), converter
+    )
+    return T.StructType.fromJson(json.loads(jschema.json()))
 
 
 @contextmanager
@@ -156,27 +227,71 @@ def _force_ltz_timestamps(spark: SparkSession):
             spark.conf.set(key, prev)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan, tolerant of TIMESTAMP(NANOS) columns: those are
-    read as long (legacy conf) and converted to µs timestamps with
-    integer DIV (ns epochs overflow a double mantissa).
+def read_parquet(
+    spark: SparkSession,
+    path: str,
+    ts_col: str | None = None,
+    start=None,
+    end=None,
+) -> DataFrame:
+    """Parquet scan with the schema read from one footer, without a job.
+
+    For a single file or a flat directory the ``StructType`` is built
+    from the first data file's footer with Spark's own converter and
+    passed to ``.schema()``: the same schema inference returns, without
+    the inference job. Partitioned layouts, empty directories,
+    unreadable footers and sessions that merge parquet schemas
+    (``spark.sql.parquet.mergeSchema``) keep Spark's inference.
+
+    TIMESTAMP(NANOS) columns are read as long (legacy conf) and
+    converted to µs timestamps with integer DIV (ns epochs overflow a
+    double mantissa). Naive timestamps read as session-tz TIMESTAMP (see
+    ``_force_ltz_timestamps``).
+
+    With ``ts_col`` the half-open range ``[start, end)`` is applied
+    so it is PUSHED INTO the parquet scan. A filter applied after the
+    ns→µs conversion wraps the column in ``timestamp_micros(... DIV
+    1000)``, which Catalyst cannot push through, so every row group
+    would be read. For a nanosecond ``ts_col`` the bounds are therefore
+    compared with the RAW int64 value before conversion, so parquet
+    row-group min/max statistics prune unread data; for µs timestamp
+    columns the plain filter already pushes down.
 
     NOTE: when ns columns are present, ``nanosAsLong`` stays set on the
     session — that conf is consulted at EXECUTION time (not just schema
-    inference), so restoring it before the action runs would break the
+    resolution), so restoring it before the action runs would break the
     deferred scan. It is additive-safe: it only affects parquet files
     that actually contain TIMESTAMP(NANOS), which Spark cannot read at
     all without it."""
-    ns_cols = _nanos_timestamp_cols(path) if "://" not in path or path.startswith("file://") else []
-    if not ns_cols:
-        with _force_ltz_timestamps(spark):
-            return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    footer, status, flat = _sample_footer(spark, path) or (None, None, False)
+    ns_cols = _nanos_timestamp_cols(footer) if footer else []
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     with _force_ltz_timestamps(spark):
-        df = spark.read.parquet(path)
+        reader = spark.read
+        if flat and spark.conf.get("spark.sql.parquet.mergeSchema") != "true":
+            reader = reader.schema(_footer_schema(spark, footer, status))
+        df = reader.parquet(path)
+
+    if ts_col is not None:
+        if ts_col in ns_cols:
+            start, end = _epoch_ns(start), _epoch_ns(end)
+        if start is not None:
+            df = df.filter(F.col(ts_col) >= F.lit(start))
+        if end is not None:
+            df = df.filter(F.col(ts_col) < F.lit(end))
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
     return df
+
+
+def _epoch_ns(dt):
+    """Naive datetimes are UTC (the session tz ``load_table`` pins)."""
+    if dt is None:
+        return None
+    if dt.tzinfo is None:
+        dt = dt.replace(tzinfo=timezone.utc)
+    return int(dt.timestamp() * 1_000_000) * 1000
 
 
 def read_parquet_ts_range(
@@ -186,40 +301,6 @@ def read_parquet_ts_range(
     start=None,
     end=None,
 ) -> DataFrame:
-    """Half-open time-range scan ``[start, end)`` with the predicate
-    PUSHED INTO the parquet scan.
-
-    A filter applied after the ns→µs conversion wraps the column in
-    ``timestamp_micros(... DIV 1000)`` — Catalyst cannot push that
-    through, so every row group gets read. Here the bound is applied to
-    the RAW int64 nanosecond value before conversion, so parquet
-    row-group min/max statistics prune unread data — the difference
-    between scanning a day and scanning 100 TB on a time-partitioned
-    fact table. For regular (µs) timestamp columns the plain filter
-    already pushes down and this degrades to exactly that."""
-    from datetime import datetime, timezone
-
-    def _ns(dt: datetime) -> int:
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return int(dt.timestamp() * 1_000_000) * 1000
-
-    _force_ltz_timestamps(spark)
-    ns_cols = _nanos_timestamp_cols(path) if "://" not in path or path.startswith("file://") else []
-    if ts_col not in ns_cols:
-        df = read_parquet(spark, path)
-        if start is not None:
-            df = df.filter(F.col(ts_col) >= F.lit(start))
-        if end is not None:
-            df = df.filter(F.col(ts_col) < F.lit(end))
-        return df
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    if start is not None:
-        df = df.filter(F.col(ts_col) >= F.lit(_ns(start)))
-    if end is not None:
-        df = df.filter(F.col(ts_col) < F.lit(_ns(end)))
-    for c in ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
-    return df
+    """Half-open time-range scan ``[start, end)`` pushed into the parquet
+    scan; ``read_parquet`` with ``ts_col`` (kept for existing callers)."""
+    return read_parquet(spark, path, ts_col, start, end)

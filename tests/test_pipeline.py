@@ -8,9 +8,9 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
-TMP = Path("/root/repo/tmp/testruns")
+TMP = REPO / "tmp" / "testruns"
 
 
 @pytest.fixture(autouse=True, scope="module")
@@ -109,7 +109,7 @@ def test_pipeline_missing_source_gate(spark):
 
     spec = PipelineSpec(
         name="missing",
-        source=SourceSpec(path="/root/repo/tmp/nope.parquet"),
+        source=SourceSpec(path=str(TMP / "nope.parquet")),
         sink=SinkSpec(path=str(TMP / "never")),
     )
     with pytest.raises(SourceMissingError):
@@ -146,7 +146,7 @@ def test_checkpoint_advances_only_on_success(spark):
     assert r2["window_start"] == datetime(2024, 1, 15)
 
     # a skipped run must NOT advance the checkpoint
-    spec.source = SourceSpec(path="/root/repo/tmp/gone.parquet", fail_on_missing=False)
+    spec.source = SourceSpec(path=str(TMP / "gone.parquet"), fail_on_missing=False)
     spec.window_end = datetime(2024, 3, 1)
     assert run_pipeline(spark, spec)["status"] == "skipped"
     assert ck.last_window_end("incr") == datetime(2024, 2, 1)
@@ -185,6 +185,68 @@ def test_checkpoint_concurrent_commit_fails_loudly(spark, tmp_path):
     assert ck.last_window_end("pipe_a") == datetime(2024, 1, 1)
     assert ck.last_window_end("pipe_b") == datetime(2024, 1, 2)
     assert not fs_exists(spark, path + ".lock")
+
+
+def test_checkpoint_read_and_commit_run_no_job(spark, tmp_path):
+    """The control plane of a batch is plain file I/O: a
+    ``last_window_end`` + ``commit`` pair starts no Spark job."""
+    from datetime import datetime
+
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+
+    sc = spark.sparkContext
+    ck = CheckpointTable(spark, str(tmp_path / "ck"))
+    ck.commit("warm", None, datetime(2024, 1, 1))
+    group = "checkpoint-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        assert ck.last_window_end("p") is None
+        ck.commit("p", None, datetime(2024, 1, 2))
+        assert ck.last_window_end("p") == datetime(2024, 1, 2)
+        ck.commit("p", datetime(2024, 1, 2), datetime(2024, 1, 3))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_checkpoint_manifest_per_pipeline(spark, tmp_path):
+    """One JSON manifest per pipeline (name URL-quoted); tz-aware
+    timestamps are stored as naive UTC."""
+    from datetime import datetime, timedelta, timezone
+
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+
+    path = tmp_path / "ck"
+    ck = CheckpointTable(spark, str(path))
+    plus2 = timezone(timedelta(hours=2))
+    ck.commit("team/events", datetime(2024, 1, 1, 2, tzinfo=plus2), datetime(2024, 1, 2, 2, tzinfo=plus2))
+    m = json.loads((path / "team%2Fevents.json").read_text())
+    assert m["pipeline_name"] == "team/events"
+    assert (m["window_start"], m["window_end"]) == ("2024-01-01T00:00:00", "2024-01-02T00:00:00")
+    assert datetime.fromisoformat(m["updated_at"]).tzinfo is None
+    assert ck.last_window_end("team/events") == datetime(2024, 1, 2)
+    assert ck.last_window_end("team") is None
+
+
+def test_checkpoint_legacy_parquet_layout_fails_loudly(spark, tmp_path):
+    """A checkpoint directory in the old parquet-table layout must not
+    read as "no checkpoint" (that would re-extract from the start)."""
+    from datetime import datetime
+
+    from pyspark.sql import Row
+
+    from etl_mini_spark.plans.checkpoint import CheckpointTable, LegacyCheckpointError
+
+    path = str(tmp_path / "legacy_ck")
+    spark.createDataFrame(
+        [Row(pipeline_name="incr", window_start=None, window_end=datetime(2024, 1, 15),
+             updated_at=datetime(2024, 1, 15))],
+        schema="pipeline_name string, window_start timestamp, window_end timestamp, "
+               "updated_at timestamp",
+    ).write.parquet(path)
+    ck = CheckpointTable(spark, path)
+    with pytest.raises(LegacyCheckpointError, match="legacy_ck"):
+        ck.last_window_end("incr")
 
 
 def test_upsert_parquet_roundtrip(spark):
